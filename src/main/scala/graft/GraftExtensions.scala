@@ -4,13 +4,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{ByteVecDot, FloatVecDot, FloatVecNorm, MinHashBands, ShingleExplode, ShingleHash64, SimHash64}
+import graft.functions.Kernel
 
 /** SQL-extension entry point: `--conf spark.sql.extensions=graft.GraftExtensions`
-  * makes every graft kernel available as a SQL function in any session of the
-  * cluster — the deployment-grade alternative to the per-session
-  * `VectorKernels.register` / `TextKernels.register` temp-function calls the
-  * library uses internally.
+  * makes every kernel of the [[Kernel]] table a SQL function in any session
+  * of the cluster, built by the same builder the Column API uses.
   *
   * {{{
   *   SELECT fvec_dot(a.embedding, b.embedding) FROM ...
@@ -24,33 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rewrite that turns row_number()<=k windows into it
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     ext.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)
-    ext.injectFunction((
-      FunctionIdentifier("fvec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "fvec_dot"),
-      exprs => FloatVecDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("fvec_norm"),
-      new ExpressionInfo(classOf[FloatVecNorm].getName, "fvec_norm"),
-      exprs => FloatVecNorm(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hash64"),
-      new ExpressionInfo(classOf[ShingleHash64].getName, "shingle_hash64"),
-      exprs => ShingleHash64(exprs.head, 3)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
-      exprs => MinHashBands(exprs.head, 32, 8)))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_explode"),
-      new ExpressionInfo(classOf[ShingleExplode].getName, "shingle_explode"),
-      exprs => ShingleExplode(exprs.head, 3)))
-    ext.injectFunction((
-      FunctionIdentifier("bvec_dot"),
-      new ExpressionInfo(classOf[ByteVecDot].getName, "bvec_dot"),
-      exprs => ByteVecDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      exprs => SimHash64(exprs.head)))
+    Kernel.all.foreach(k => ext.injectFunction((
+      FunctionIdentifier(k.name), new ExpressionInfo(k.className, k.name), k.build)))
   }
 }

@@ -40,7 +40,6 @@ object IvfPqStageProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    functions.VectorKernels.register(spark)
     import functions.VectorKernels.ddot
     import operators.Similarity.{dot, l2norm}
     val e = Tables.load(spark, dir, "embeddings")

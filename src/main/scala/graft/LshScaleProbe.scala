@@ -128,7 +128,6 @@ object LshScaleProbe {
     if (args.contains("recall") || args.contains("ivfpq") ||
         args.contains("hamming") || args.contains("multiprobe")) {
       import operators.Similarity.{dot, l2norm}
-      functions.VectorKernels.register(spark)
       val n = e.count()
       // same ~256-query budget rule as sampleModulus, driver-side on the
       // exact count (a dev probe may collect one long). The budget is an

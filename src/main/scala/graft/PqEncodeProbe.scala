@@ -24,7 +24,6 @@ object PqEncodeProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    functions.VectorKernels.register(spark)
     import functions.VectorKernels.ddot
     val e = Tables.load(spark, dir, "embeddings")
     val n = e.count()

@@ -62,7 +62,7 @@ object Sessions {
     // scale anyway — pinning it here aligns local plans with production
     // and halves the fixed cost of every wide exchange (measured 0.37 →
     // 0.20 s on a 32-map-task exchange, 0.37 → 0.19 s on a 600 k-row
-    // group-by, DecProbe A/B)
+    // group-by, A/B recorded in OPTIMIZATION_r19.md)
     "spark.shuffle.sort.bypassMergeThreshold" -> "1",
     // preferSortMergeJoin=false + the AQE SMJ→SHJ local-map threshold
     // (guide §3.1/§9) were tried in r20 and REVERTED: an interleaved

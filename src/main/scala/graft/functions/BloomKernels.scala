@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Encoders}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{call_function, udaf}
+import org.apache.spark.sql.functions.udaf
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
 
 /** Distributed Bloom filter over 64-bit keys (SURVEY.md §2.12 D3 scale
@@ -118,20 +118,14 @@ case class BloomContains(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration + Column-level API (same pattern as
-  * [[VectorKernels]]/[[TextKernels]]).
+/** Column-level API for the bloom filter: a typed-aggregate build, and the
+  * [[BloomContains]] probe built from [[Kernel]].
   */
 object BloomKernels {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bloom_contains",
-      exprs => BloomContains(exprs(0), exprs(1)), "built-in")
-  }
-
   /** Aggregate a LongType key column into one bloom-bits array. */
   def bloomAgg(c: Column, numBits: Int = 1 << 19): Column =
     udaf(new BloomBuild(numBits), Encoders.scalaLong).apply(c)
 
   def contains(bits: Column, key: Column): Column =
-    call_function("bloom_contains", bits, key)
+    Kernel.bloomContains(bits, key)
 }

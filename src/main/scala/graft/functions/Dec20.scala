@@ -131,33 +131,6 @@ object Dec20 {
     }
   }
 
-  /** The [[Deterministic.dsumFine]] dot product in one pass:
-    * `sum(cast((double) x_i * w_i AS DECIMAL(38,20))).cast("double")` over
-    * the common prefix of an `array<float>` vector and an `array<double>`
-    * weight vector — digit-identical to exploding the vector and running
-    * the grouped decimal sum (same IEEE widen+multiply per addend, same
-    * overflow/NaN skip, exact order-independent total), minus the d×-row
-    * Generate fan-out and the per-group decimal hash aggregate. One
-    * static-forwarder call per ROW from generated code (the loop lives
-    * here, JIT-compiled once), so callers stay inside WholeStageCodegen.
-    *
-    * NULL parity caveat: a decimal sum whose every addend is NULL yields
-    * NULL, this returns 0.0 — unreachable for finite unit-scale inputs
-    * (an addend is skipped only at |x·w| ≥ 10¹⁸/NaN/Inf), and Dec20Spec
-    * pins value equality on the reachable domain.
-    */
-  def dotScaledFW(x: org.apache.spark.sql.catalyst.util.ArrayData,
-                  w: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
-    val n = math.min(x.numElements(), w.numElements())
-    val acc = new Array[Long](2)
-    var i = 0
-    while (i < n) {
-      addScaled(x.getFloat(i).toDouble * w.getDouble(i), acc, 0)
-      i += 1
-    }
-    toDouble(acc, 0)
-  }
-
   /** Exact total → double, the `CAST(decimal(38,20) AS DOUBLE)` collapse. */
   def toDouble(acc: Array[Long], slot: Int): Double = {
     val hi = acc(2 * slot)
@@ -269,84 +242,4 @@ object VecOuterTriSum {
   def triSum(dim: Int)(emb: Column): Column =
     udaf(new VecOuterTriSumAgg(dim),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Float]]())(emb)
-}
-
-/** Per-partition state of [[VecScaledSumAgg]]: Int128 accumulators for d
-  * slots, 2 longs per slot; sized lazily from the first row (empty until
-  * then), so the aggregate needs no dimension constant at plan time.
-  */
-final case class DSumBuf(acc: Array[Long])
-
-/** `agg(VecScaledSum.scaledSum(embedding, r))` → array<double> whose slot i
-  * is EXACTLY `sum(cast((double) x_i · r AS DECIMAL(38,20))).cast(double)`
-  * over the group's rows — the gradient moment
-  * `groupBy(key, i).agg(dsumFine(x * r))` computed without exploding the
-  * vector: per input row the d products accumulate into a flat Int128
-  * buffer ([[Dec20]]), the exchange carries ONE buffer per partition
-  * instead of d partially-aggregated decimal rows, and the only
-  * BigDecimals run once per slot at finish. The float→double widening and
-  * the x_i·r product are the identical IEEE ops the exploded form
-  * evaluated, so each slot's addend stream is identical addend-for-addend
-  * and the exact decimal sum is order-independent (Dec20Spec pins value
-  * equality against the exploded dsumFine form). Fixed-size buffer
-  * (2·d longs, row-count-independent) — the reviewed bounded-buffer
-  * contract of the typed-Aggregator whitelist.
-  */
-class VecScaledSumAgg
-    extends Aggregator[(Seq[Float], Double), DSumBuf, Seq[Double]] {
-
-  override def zero: DSumBuf = DSumBuf(Array.emptyLongArray)
-
-  override def reduce(b: DSumBuf, row: (Seq[Float], Double)): DSumBuf = {
-    val (emb, r) = row
-    val buf = if (b.acc.length == 0) DSumBuf(new Array[Long](2 * emb.length)) else b
-    require(2 * emb.length == buf.acc.length,
-      s"vec_scaled_sum expects ${buf.acc.length / 2}-dim embeddings, got ${emb.length}")
-    var i = 0
-    while (i < emb.length) {
-      Dec20.addScaled(emb(i).toDouble * r, buf.acc, i)
-      i += 1
-    }
-    buf
-  }
-
-  override def merge(b1: DSumBuf, b2: DSumBuf): DSumBuf = {
-    if (b2.acc.length != b1.acc.length)
-      return if (b1.acc.length == 0) b2 else b1 // one side never saw a row
-    val a1 = b1.acc
-    val a2 = b2.acc
-    var s = 0
-    val nSlots = a1.length / 2
-    while (s < nSlots) {
-      val oldLo = a1(2 * s + 1)
-      val lo = a2(2 * s + 1)
-      val newLo = oldLo + lo
-      val carry = ((oldLo & lo) | ((oldLo | lo) & ~newLo)) >>> 63
-      a1(2 * s + 1) = newLo
-      a1(2 * s) = a1(2 * s) + a2(2 * s) + carry
-      s += 1
-    }
-    b1
-  }
-
-  override def finish(b: DSumBuf): Seq[Double] = {
-    val n = b.acc.length / 2
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) { out(i) = Dec20.toDouble(b.acc, i); i += 1 }
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
-  }
-
-  override def bufferEncoder: Encoder[DSumBuf] = Encoders.product[DSumBuf]
-
-  override def outputEncoder: Encoder[Seq[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-}
-
-object VecScaledSum {
-  /** Column form: emb array<float>, scale double. */
-  def scaledSum(emb: Column, scale: Column): Column =
-    udaf(new VecScaledSumAgg,
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Seq[Float], Double)]())(
-      emb, scale)
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -476,44 +475,13 @@ case class TrigramCodes(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Session registration + Column-level API (same pattern as [[VectorKernels]]). */
+/** Column-level API for the text kernels (built from [[Kernel]]). */
 object TextKernels {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("shingle_hash64",
-      exprs => ShingleHash64(exprs.head, 3), "built-in")
-    reg.createOrReplaceTempFunction("minhash_bands",
-      exprs => MinHashBands(exprs.head, 32, 8), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("shingle_explode",
-      exprs => ShingleExplode(exprs.head, 3), "built-in")
-    reg.createOrReplaceTempFunction("trigram_codes",
-      exprs => TrigramCodes(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("pair_explode",
-      exprs => {
-        // the cap must be a foldable integral expression; anything else
-        // (a column, a string) should fail resolution with a clear message
-        // rather than a ClassCastException deep in eval
-        val capValue =
-          if (exprs.length > 2 && exprs(2).foldable)
-            exprs(2).eval(InternalRow.empty) match {
-              case i: Int => Some(i)
-              case l: Long if l.isValidInt => Some(l.toInt)
-              case _ => None
-            }
-          else None
-        PairExplode(exprs(0), exprs(1), capValue.getOrElse(
-          throw new IllegalArgumentException(
-            "pair_explode(g, ds, cap): cap must be an integer literal")))
-      }, "built-in")
-  }
-
-  def shingleHash64(text: Column): Column = call_function("shingle_hash64", text)
-  def minhashBands(sh: Column): Column = call_function("minhash_bands", sh)
-  def simhash64(text: Column): Column = call_function("simhash64", text)
-  def shingleExplode(text: Column): Column = call_function("shingle_explode", text)
-  def trigramCodes(text: Column): Column = call_function("trigram_codes", text)
+  def shingleHash64(text: Column): Column = Kernel.shingleHash64(text)
+  def minhashBands(sh: Column): Column = Kernel.minhashBands(sh)
+  def simhash64(text: Column): Column = Kernel.simhash64(text)
+  def shingleExplode(text: Column): Column = Kernel.shingleExplode(text)
+  def trigramCodes(text: Column): Column = Kernel.trigramCodes(text)
   def pairExplode(g: Column, ds: Column, cap: Int): Column =
-    call_function("pair_explode", g, ds, org.apache.spark.sql.functions.lit(cap))
+    Kernel.pairExplode(g, ds, org.apache.spark.sql.functions.lit(cap))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType}
 
 /** Input validation shared by the SQL-exposed kernels. Spark 4 hides
@@ -149,40 +148,6 @@ case class DoubleVecDot(left: Expression, right: Expression)
          |${ev.value} = ${ev.value}_acc;
        """.stripMargin
     })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** The [[graft.functions.Deterministic.dsumFine]] dot product —
-  * `sum(cast((double) x_i * w_i AS DECIMAL(38,20))).cast("double")` over an
-  * `array<float>` vector and an `array<double>` weight vector — as one
-  * codegen-friendly scalar: the per-addend work runs in [[Dec20.dotScaledFW]]
-  * (Int128 accumulation, exact scale-20 decimal), reached by a single
-  * static call per row from the generated code, so consumers that
-  * previously EXPLODED the vector to feed a per-(key, i) decimal hash
-  * aggregate (the GD z/score phases) become a shuffle-free map pass with
-  * the identical exact value. See [[Dec20.dotScaledFW]] for the NULL-parity
-  * caveat (unreachable on finite unit-scale inputs).
-  */
-case class FloatDoubleVecDotFine(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "fvec_dot_fine"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = VecTypeCheck.arrayOf(FloatType, prettyName, "left" -> left.dataType)
-    if (l != TypeCheckResult.TypeCheckSuccess) l
-    else VecTypeCheck.arrayOf(DoubleType, prettyName, "right" -> right.dataType)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Dec20.dotScaledFW(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.Dec20.dotScaledFW($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1121,59 +1086,20 @@ case class IvfResidual(emb: Expression, centId: Expression,
     copy(emb = newLeft, centId = newRight)
 }
 
-/** Session registration + Column-level API for the kernels. */
+/** Column-level API for the vector kernels (built from [[Kernel]]). */
 object VectorKernels {
+  import org.apache.spark.sql.functions.lit
 
-  /** Idempotent per-session registration (temp functions live in the
-    * session's registry; every query entry point calls this first).
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("fvec_dot",
-      exprs => FloatVecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("fvec_norm",
-      exprs => FloatVecNorm(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("bvec_dot",
-      exprs => ByteVecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("dvec_dot",
-      exprs => DoubleVecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("fvec_dot_fine",
-      exprs => FloatDoubleVecDotFine(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("lsh_abuckets",
-      // bands/maxBits arrive as foldable int literals (plan constants of
-      // the calling operator) — evaluated once at resolution
-      exprs => LshAutoBuckets(exprs(0), exprs(1),
-        exprs(2).eval(null).asInstanceOf[Int],
-        exprs(3).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("lsh_afliporder",
-      exprs => LshAutoFlipOrder(exprs(0), exprs(1), exprs(2),
-        exprs(3).eval(null).asInstanceOf[Int],
-        exprs(4).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("lsh_aprobeseq",
-      exprs => LshProbeSeq(exprs(0), exprs(1), exprs(2),
-        exprs(3).eval(null).asInstanceOf[Int],
-        exprs(4).eval(null).asInstanceOf[Int],
-        exprs(5).eval(null).asInstanceOf[Int]), "built-in")
-  }
-
-  def fdot(a: Column, b: Column): Column = call_function("fvec_dot", a, b)
-  def fnorm(a: Column): Column = call_function("fvec_norm", a)
-  def bdot(a: Column, b: Column): Column = call_function("bvec_dot", a, b)
-  def ddot(a: Column, b: Column): Column = call_function("dvec_dot", a, b)
-  def fdotFine(a: Column, b: Column): Column = call_function("fvec_dot_fine", a, b)
+  def fdot(a: Column, b: Column): Column = Kernel.fvecDot(a, b)
+  def fnorm(a: Column): Column = Kernel.fvecNorm(a)
+  def bdot(a: Column, b: Column): Column = Kernel.bvecDot(a, b)
+  def ddot(a: Column, b: Column): Column = Kernel.dvecDot(a, b)
   def abuckets(emb: Column, abits: Column, bands: Int, maxBits: Int): Column =
-    call_function("lsh_abuckets", emb, abits,
-      org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(maxBits))
+    Kernel.lshABuckets(emb, abits, lit(bands), lit(maxBits))
   def afliporder(emb: Column, abits: Column, band: Column,
                  bands: Int, maxBits: Int): Column =
-    call_function("lsh_afliporder", emb, abits, band,
-      org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(maxBits))
+    Kernel.lshAFlipOrder(emb, abits, band, lit(bands), lit(maxBits))
   def aprobeseq(emb: Column, abits: Column, band: Column,
                 bands: Int, maxBits: Int, budget: Int): Column =
-    call_function("lsh_aprobeseq", emb, abits, band,
-      org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(maxBits),
-      org.apache.spark.sql.functions.lit(budget))
+    Kernel.lshAProbeSeq(emb, abits, band, lit(bands), lit(maxBits), lit(budget))
 }

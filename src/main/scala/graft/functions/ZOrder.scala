@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** `zvalue(a, b)` — Morton/Z-order interleave of the low 32 bits of two
@@ -64,9 +63,5 @@ object ZValue {
     x
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("zvalue",
-      exprs => ZValue(exprs(0), exprs(1)), "built-in")
-
-  def zvalue(a: Column, b: Column): Column = call_function("zvalue", a, b)
+  def zvalue(a: Column, b: Column): Column = Kernel.zvalue(a, b)
 }

@@ -137,7 +137,6 @@ object Dedup {
     * documented hot-only-pair trade applies to any consumer).
     */
   private def shinglePairCommons(d: DataFrame, dfCap: Int): DataFrame = {
-    graft.functions.TextKernels.register(d.sparkSession)
     val ex = Tables.spread(d)
       .select(col("doc_id"), col("lang"),
         graft.functions.TextKernels.shingleHash64(col("text")).as("sh"))
@@ -316,7 +315,6 @@ object Dedup {
     */
   def minhashPairs(d: DataFrame): DataFrame = {
     import graft.functions.TextKernels
-    TextKernels.register(d.sparkSession)
     // Shingling + signatures are one compiled kernel pass per row
     // (TextKernels); withSh is persisted because it feeds the banding pass
     // AND both sides of the verification join.
@@ -376,7 +374,6 @@ object Dedup {
     // Entirely per-row (one kernel call per doc) — the explode + double
     // groupBy formulation paid two shuffles of docs×tokens×bits rows for
     // the same signature.
-    graft.functions.TextKernels.register(d.sparkSession)
     Tables.spread(d)
       .select(col("doc_id"),
         graft.functions.TextKernels.simhash64(col("text")).as("simhash"))
@@ -558,7 +555,6 @@ object Dedup {
   private val dedupDecontaminate = Q(
     "dedup_decontaminate",
     (s, dir) => {
-      graft.functions.TextKernels.register(s)
       val d = docs(s, dir)
       // shingle_explode is the custom Generator (true UDTF): shingles stream
       // straight into Generate with no per-row intermediate array
@@ -591,8 +587,6 @@ object Dedup {
     "dedup_decontaminate_bloom",
     (s, dir) => {
       import graft.functions.{BloomKernels, TextKernels}
-      TextKernels.register(s)
-      BloomKernels.register(s)
       val d = docs(s, dir)
       val benchSh = d.filter(col("doc_id") < 20)
         .select(TextKernels.shingleExplode(col("text")))
@@ -619,7 +613,6 @@ object Dedup {
     * g = one shingle hash).
     */
   private def explodedShingles(d: DataFrame): DataFrame = {
-    graft.functions.TextKernels.register(d.sparkSession)
     Tables.spread(d)
       .select(col("doc_id"), col("lang"),
         graft.functions.TextKernels.shingleHash64(col("text")).as("sh"))
@@ -1344,7 +1337,6 @@ object Dedup {
   private val dedupShingleProfile = Q(
     "dedup_shingle_profile",
     (s, dir) => {
-      graft.functions.TextKernels.register(s)
       val df = Tables.spread(docs(s, dir))
         .select(col("doc_id"),
           explode(graft.functions.TextKernels.shingleHash64(col("text"))).as("g"))
@@ -1465,7 +1457,6 @@ object Dedup {
     "dedup_band_efficiency",
     (s, dir) => {
       import graft.functions.TextKernels
-      TextKernels.register(s)
       val withSh = graft.Caches.track(Tables.spread(docs(s, dir))
         .select(col("doc_id"), TextKernels.shingleHash64(col("text")).as("sh")))
       val banded = withSh.select(col("doc_id"),
@@ -1532,7 +1523,6 @@ object Dedup {
     "dedup_minhash_scurve",
     (s, dir) => {
       import graft.functions.TextKernels
-      TextKernels.register(s)
       val exact = commonsShared(s, dir)
         .withColumn("jac", least(col("common").cast("double") /
           greatest(col("n_a") + col("n_b") - col("common"), lit(1)), lit(1.0)))

@@ -19,7 +19,6 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   private def emb(s: SparkSession, dir: String): DataFrame = {
-    VectorKernels.register(s)
     // spread: the local embeddings file is a single scan partition; dot
     // products would otherwise run single-threaded (see Tables.spread).
     Tables.spread(Tables.load(s, dir, "embeddings"))
@@ -162,7 +161,6 @@ object Similarity {
   private val simBruteTopk = Q(
     "sim_brute_topk",
     (s, dir) => {
-      VectorKernels.register(s)
       // Query side: straight off the scan so `vec_id < 10` pushes into
       // parquet (10-row read); candidate side: spread for parallel dots.
       val raw = Tables.load(s, dir, "embeddings")
@@ -619,7 +617,6 @@ object Similarity {
     * O(candidates × vector width), ~20× more here.
     */
   private def lshBanded(e: DataFrame, bands: Int, bitsPerBand: Int): DataFrame = {
-    VectorKernels.register(e.sparkSession)
     val pl = if (bands * bitsPerBand <= NumPlanes) planes
              else planesFor(bands * bitsPerBand)
     def bucketFor(b: Int): Column = (0 until bitsPerBand).map { j =>
@@ -752,7 +749,6 @@ object Similarity {
 
   private[graft] def lshBandedAuto(e: DataFrame,
                                    fixedBits: Option[Int] = None): DataFrame = {
-    VectorKernels.register(e.sparkSession)
     // ONE projection computes dots → sign array → packed buckets, and the
     // PERSISTED frame carries only (vec_id, embedding, nrm, bks) — the
     // intermediate AutoBands·MaxAutoBits-long sign array must NOT reach the cache: the SQL
@@ -778,7 +774,6 @@ object Similarity {
     * needs.
     */
   private[graft] def lshBucketsAutoLight(e: DataFrame): DataFrame = {
-    VectorKernels.register(e.sparkSession)
     explodeBands(
       e.select(col("vec_id"), col("embedding"))
         .crossJoin(broadcast(autoBits(e)))
@@ -991,7 +986,6 @@ object Similarity {
   private val simLshMultiprobeRecall = Q(
     "sim_lsh_multiprobe_recall",
     (s, dir) => {
-      VectorKernels.register(s)
       val e = emb(s, dir)
       val got = lshMultiProbeTopK(e).select("q_id", "n_id")
       panelRecallReadout(s, dir, got)
@@ -1087,7 +1081,6 @@ object Similarity {
   private val simLshMultiprobe2Recall = Q(
     "sim_lsh_multiprobe2_recall",
     (s, dir) => {
-      VectorKernels.register(s)
       val e = emb(s, dir)
       val got = lshMultiProbeTopK(e, pairBits = MultiProbePairBits)
         .select("q_id", "n_id")
@@ -1188,7 +1181,6 @@ object Similarity {
   private val simLshMultiprobeBudgetRecall = Q(
     "sim_lsh_multiprobe_budget_recall",
     (s, dir) => {
-      VectorKernels.register(s)
       val e = emb(s, dir)
       val got = lshMultiProbeTopK(e, probeBudget = MultiProbeBudget)
         .select("q_id", "n_id")
@@ -1220,7 +1212,6 @@ object Similarity {
     * with cluster cores (√tasks), independent of data volume per task.
     */
   def tiledCosinePairs(e: DataFrame, minCos: Double, blocks: Int = 16): DataFrame = {
-    VectorKernels.register(e.sparkSession)
     // pmod, not %: a negative vec_id under % would yield a negative block
     // and a descending (empty) tile sequence — pmod keeps the helper safe
     // for arbitrary id domains
@@ -1329,7 +1320,6 @@ object Similarity {
     * centroid/query reads.
     */
   def ivfTopK(e: DataFrame, raw: DataFrame, k: Int = 5): DataFrame = {
-    VectorKernels.register(e.sparkSession)
     val cents = broadcast(raw.filter(col("vec_id") < IvfK)
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
         l2norm(col("embedding")).as("c_nrm")))
@@ -1425,7 +1415,6 @@ object Similarity {
     * query-side read.
     */
   def quantizedTopK(e: DataFrame, raw: DataFrame, k: Int = 5): DataFrame = {
-    VectorKernels.register(e.sparkSession)
     def quantized(d: DataFrame): DataFrame = d
       .withColumn("scale",
         greatest(array_max(transform(col("embedding"), x => abs(x))), lit(1e-30f))
@@ -1539,7 +1528,6 @@ object Similarity {
     * codebook/query reads.
     */
   def pqTopK(e: DataFrame, raw: DataFrame, k: Int = 5): DataFrame = {
-    VectorKernels.register(e.sparkSession)
     import graft.functions.Deterministic.dsumFine
     val subs = explode(sequence(lit(0), lit(PqM - 1))).as("sub")
     def subSlice(emb: Column) =
@@ -1806,7 +1794,6 @@ object Similarity {
   private val simIvfPqRecall = Q(
     "sim_ivfpq_recall",
     (s, dir) => {
-      VectorKernels.register(s)
       val e = emb(s, dir)
       val got = ivfPqTopK(e, Tables.load(s, dir, "embeddings"),
           panel = Some(residuePanel(e)))
@@ -1828,7 +1815,6 @@ object Similarity {
   private val simIvfPqTrainedRecall = Q(
     "sim_ivfpq_trained_recall",
     (s, dir) => {
-      VectorKernels.register(s)
       val e = emb(s, dir)
       val (cb2, _) = pqTrainChain(s, dir)
       val cbArg = cb2.select(col("code"), col("sub"), col("cb").as("cb_sub"))
@@ -1868,7 +1854,6 @@ object Similarity {
     * [[simPqTrain]]'s scaladoc for the exact conventions.
     */
   private[graft] def pqTrainChain(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    VectorKernels.register(s)
     import graft.functions.Deterministic.dsumFine
     // every stage is a [[graft.Caches.memo]] (r17): THREE declared rows
     // consume this chain (sim_pq_train, sim_ivfpq_trained,
@@ -2171,7 +2156,6 @@ object Similarity {
   private[graft] def ivfResiduals(v: DataFrame, raw: DataFrame,
                                   ivfK: Int = IvfK,
                                   assignKernel: Boolean = true): DataFrame = {
-    VectorKernels.register(v.sparkSession)
     val cents = broadcast(raw.filter(col("vec_id") < ivfK)
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
         l2norm(col("embedding")).as("c_nrm")))
@@ -2269,7 +2253,6 @@ object Similarity {
                 encodeKernel: Boolean = true,
                 ivfK: Int = IvfK): DataFrame = {
     val shortlistN = if (shortlist > 0) shortlist else 4 * k
-    VectorKernels.register(e.sparkSession)
     import graft.functions.Deterministic.dsumFine
     val qv = panel.getOrElse(raw.filter(col("vec_id") < 10))
       .select(col("vec_id"), col("embedding"))
@@ -2526,7 +2509,6 @@ object Similarity {
   private val simHammingRecall = Q(
     "sim_hamming_recall",
     (s, dir) => {
-      VectorKernels.register(s)
       val e = emb(s, dir)
       val got = hammingTopK(e, Tables.load(s, dir, "embeddings"),
           panel = Some(residuePanel(e)))
@@ -2772,7 +2754,6 @@ object Similarity {
                   panel: Option[DataFrame] = None,
                   shortlist: Int = -1): DataFrame = {
     val shortlistN = if (shortlist > 0) shortlist else 4 * k
-    VectorKernels.register(e.sparkSession)
     // 64 sign bits via the adaptive-LSH bucket kernel at its full fixed
     // width (abits = maxBits = 16 → planes 0..63, band-major — identical
     // plane indexing to the oracle's plane // 16 packing)
@@ -2973,7 +2954,6 @@ object Similarity {
                   iters: Int = 2): (DataFrame, DataFrame) = {
     require(k >= 1, s"kmeansAssign: k must be >= 1, got $k")
     require(iters >= 1, s"kmeansAssign: iters must be >= 1, got $iters")
-    VectorKernels.register(e.sparkSession)
     val base = e.select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", sqrt(dotD(col("v"), col("v"))))
@@ -3574,7 +3554,6 @@ object Similarity {
     "sim_rand_proj",
     (s, dir) => {
       import graft.functions.Deterministic.dsumFine
-      VectorKernels.register(s)
       val ys = (0 until 16).map { j =>
         val sv = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(
           rpSigns(j).map(lit)): _*)
@@ -3752,7 +3731,6 @@ object Similarity {
   private val simRangeQuery = Q(
     "sim_range_query",
     (s, dir) => {
-      VectorKernels.register(s)
       val raw = Tables.load(s, dir, "embeddings")
       val seed = broadcast(raw.filter(col("vec_id") === 0)
         .select(col("embedding").as("s_emb"))
@@ -3875,7 +3853,6 @@ object Similarity {
   private val simRrfFusion = Q(
     "sim_rrf_fusion",
     (s, dir) => {
-      VectorKernels.register(s)
       val raw = Tables.load(s, dir, "embeddings")
       val q = broadcast(raw.filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
@@ -4287,7 +4264,6 @@ object Similarity {
   private val simPairHist = Q(
     "sim_pair_hist",
     (s, dir) => {
-      VectorKernels.register(s)
       val e = emb(s, dir).filter(col("vec_id") % 8 === 0)
         .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
       val a = e.toDF("q_id", "q_emb", "q_nrm")
@@ -4570,7 +4546,6 @@ object Similarity {
   private val simIvfRecall = Q(
     "sim_ivf_recall",
     (s, dir) => {
-      VectorKernels.register(s)
       val raw = Tables.load(s, dir, "embeddings")
       val e = emb(s, dir)
       val cents = broadcast(raw.filter(col("vec_id") < IvfK)
@@ -5206,7 +5181,6 @@ object Similarity {
   private val simMmrRerank = Q(
     "sim_mmr_rerank",
     (s, dir) => {
-      VectorKernels.register(s)
       val raw = Tables.load(s, dir, "embeddings")
       val q = broadcast(raw.filter(col("vec_id") === 0)
         .select(col("embedding").as("q_emb"), l2norm(col("embedding")).as("q_nrm")))
@@ -5307,7 +5281,6 @@ object Similarity {
   private val simRocchioExpand = Q(
     "sim_rocchio_expand",
     (s, dir) => {
-      VectorKernels.register(s)
       val raw = Tables.load(s, dir, "embeddings")
       val q = broadcast(raw.filter(col("vec_id") === 0)
         .select(col("embedding").as("q_emb"), l2norm(col("embedding")).as("q_nrm")))

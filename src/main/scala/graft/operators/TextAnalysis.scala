@@ -254,7 +254,6 @@ object TextAnalysis {
       // whole query is two narrow shuffles (by shingle hash, then by doc),
       // no self-join (string-keyed agg+join formulation measured 4.3 s at
       // sf0.1; this one 0.74 s)
-      graft.functions.TextKernels.register(s)
       val ex = docsSpread(s, dir).select(col("doc_id"),
         explode(graft.functions.TextKernels.shingleHash64(col("text"))).as("g"))
       ex.withColumn("fd", min(col("doc_id")).over(Window.partitionBy("g")))
@@ -393,7 +392,6 @@ object TextAnalysis {
       // per character and re-scanned the text per `substr` (O(n²)/doc);
       // the kernel is one O(n) pass, and both corpus-scale aggregates plus
       // the exchange now key on fixed-width longs instead of strings.
-      graft.functions.TextKernels.register(s)
       // the explicit isNotNull(doc_id) mirrors the constraint the final
       // left join INFERS onto the prediction branch only (r20): without it
       // the two dt consumers' scan filters differ — (isnotnull(text) ∧

@@ -22,9 +22,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * is the difference between shuffling the fact table and shuffling k rows
   * per (group × partition).
   *
-  * The logical node is planned by [[TopKStrategy]] (injected via
-  * `spark.experimental.extraStrategies` in [[TopK.perGroup]] or
-  * `graft.GraftExtensions`).
+  * The logical node is planned by [[TopKStrategy]]. A session built with
+  * `graft.GraftExtensions` has it from the start; otherwise
+  * [[TopK.perGroup]] appends it to the session's
+  * `spark.experimental.extraStrategies` once, on first use.
   */
 final case class TopKPerGroupNode(
     groupExprs: Seq[Expression],

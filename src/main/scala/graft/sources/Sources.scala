@@ -221,7 +221,6 @@ object Sources {
   def zorderClusteredParquet(df: DataFrame, out: String,
                              colA: String, colB: String,
                              files: Int, mode: String = "overwrite"): Unit = {
-    graft.functions.ZValue.register(df.sparkSession)
     df.withColumn("_z", graft.functions.ZValue.zvalue(col(colA), col(colB)))
       .repartitionByRange(files, col("_z"))
       .sortWithinPartitions(col("_z"))

@@ -72,7 +72,6 @@ object SemanticDedupStream {
   def signatures(vecs: DataFrame): Dataset[SigRow] = {
     val s = vecs.sparkSession
     import s.implicits._
-    VectorKernels.register(s)
     vecs.select(col("vec_id"), col("ts"),
         VectorKernels.abuckets(col("embedding"), lit(16L), 4, 16).as("sig"))
       .select(col("vec_id"), col("ts"), col("sig").getItem(0).as("s0"),

@@ -13,14 +13,19 @@ object GraftBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Column → catalyst Expression (Spark 4 moved `Column.expr` behind the
-    * classic converter).
+    * classic converter). The converter defers most columns to analysis;
+    * a literal converts at once, so a kernel builder can read it as a plan
+    * constant.
     */
   def expr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    classic.ExpressionUtils.expression(c)
+    c.node match {
+      case l: internal.Literal => classic.ColumnNodeToExpressionConverter(l)
+      case _ => classic.ExpressionUtils.expression(c)
+    }
 
-  /** catalyst Expression → Column — for kernels carrying non-literal plan
-    * constants (e.g. a collected codebook array), which the temp-function
-    * registry cannot express.
+  /** catalyst Expression → Column — how every graft kernel reaches the
+    * Column API (`graft.functions.Kernel.apply`), plan constants included
+    * (e.g. a collected codebook array).
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)

@@ -325,7 +325,6 @@ class DedupSpec extends SparkSuite {
 
   test("bloom filter: zero false negatives; disjoint-key FPR within bound") {
     import graft.functions.BloomKernels
-    BloomKernels.register(spark)
     val inserted = spark.range(0, 2000).select(xxhash64(col("id")).as("h"))
     val bits = inserted.agg(BloomKernels.bloomAgg(col("h"), 1 << 16).as("bits"))
     val hits = inserted.crossJoin(broadcast(bits))

@@ -2,78 +2,99 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** End-to-end check of the `spark.sql.extensions` entry point: a session
-  * built with `graft.GraftExtensions` resolves the kernel functions in plain
-  * SQL with no per-session register calls.
+import graft.functions.Kernel
+
+/** End-to-end check of the `spark.sql.extensions` entry point, driven by the
+  * [[Kernel]] table: a session built with `graft.GraftExtensions` resolves
+  * every kernel by name in plain SQL, and nothing else.
   */
 class ExtensionsSpec extends SparkSuite {
 
-  test("GraftExtensions injects the kernel functions into SQL") {
-    // force the shared context to exist first, then build a sibling session
-    // with extensions on the same SparkContext
+  /** A sibling session on the shared SparkContext, built with the
+    * extensions. `spark.sql.extensions` is a static conf — honored only when
+    * the SparkContext is created — so `withExtensions` is the equivalent
+    * supported path for an existing context and exercises the same class.
+    */
+  private lazy val extSession: SparkSession = {
     spark.sparkContext
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    // spark.sql.extensions is a static conf — honored only when the
-    // SparkContext is created, so a config() here would be ignored against
-    // the shared test context. withExtensions is the equivalent supported
-    // path for an existing context and exercises the same class.
-    val extSession = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      val row = extSession.sql(
-        """SELECT fvec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
-          |                array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d,
-          |       fvec_norm(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS n,
-          |       size(shingle_hash64('a b c d e')) AS n_shingles,
-          |       size(minhash_bands(shingle_hash64('a b c d e'))) AS n_bands,
-          |       simhash64('a b c') AS sh,
-          |       bvec_dot(array(CAST(2 AS TINYINT), CAST(-3 AS TINYINT)),
-          |                array(CAST(4 AS TINYINT), CAST(5 AS TINYINT))) AS bd
-          |""".stripMargin).head()
-      assert(row.getDouble(0) == 11.0)
-      assert(row.getDouble(1) == 5.0)
-      assert(row.getInt(2) == 3)   // 5 words → 3 trigram shingles
-      assert(row.getInt(3) == 8)   // 8 LSH bands
-      assert(row.getLong(4) != 0L)
-      assert(row.getLong(5) == -7L)  // 2*4 + (-3)*5
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+    try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+    finally {
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)
     }
   }
 
+  /** One wrong-typed call per kernel: without `checkInputDataTypes` these
+    * would pass analysis and read garbage through ArrayData accessors.
+    */
+  private val wrongTyped = Map(
+    "fvec_dot" -> "fvec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))", // double, not float
+    "fvec_norm" -> "fvec_norm('nope')",
+    "bvec_dot" -> "bvec_dot(array(1, 2), array(3, 4))", // int, not tinyint
+    "dvec_dot" -> "dvec_dot(array(CAST(1 AS FLOAT)), array(CAST(2 AS FLOAT)))",
+    "lsh_abuckets" -> "lsh_abuckets(array(1.0D), CAST(4 AS BIGINT), 10, 16)",
+    "lsh_afliporder" -> "lsh_afliporder('x', CAST(4 AS BIGINT), 0, 10, 16)",
+    "lsh_aprobeseq" -> "lsh_aprobeseq(array(CAST(1 AS FLOAT)), 'x', 0, 10, 16, 8)",
+    "shingle_hash64" -> "shingle_hash64(42)",
+    "minhash_bands" -> "minhash_bands(array('a'))",
+    "simhash64" -> "simhash64(array(1))",
+    "shingle_explode" -> "shingle_explode(7)",
+    "trigram_codes" -> "trigram_codes(7)",
+    "pair_explode" -> "pair_explode(CAST(7 AS BIGINT), array(1, 2), 5)",
+    "bloom_contains" -> "bloom_contains(array(1), CAST(1 AS BIGINT))", // int bits, not bigint
+    "zvalue" -> "zvalue('a', 'b')")
+
+  test("GraftExtensions injects the kernel functions into SQL") {
+    // exactly the table: every entry, and no function beyond it
+    val plain = spark.newSession()
+    val injected = extSession.catalog.listFunctions().collect().map(_.name).toSet --
+      plain.catalog.listFunctions().collect().map(_.name)
+    assert(injected == Kernel.all.map(_.name).toSet)
+    Kernel.all.foreach(k => assert(!plain.catalog.functionExists(k.name), k.name))
+    val row = extSession.sql(
+      """SELECT fvec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
+        |                array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d,
+        |       fvec_norm(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS n,
+        |       size(shingle_hash64('a b c d e')) AS n_shingles,
+        |       size(minhash_bands(shingle_hash64('a b c d e'))) AS n_bands,
+        |       simhash64('a b c') AS sh,
+        |       bvec_dot(array(CAST(2 AS TINYINT), CAST(-3 AS TINYINT)),
+        |                array(CAST(4 AS TINYINT), CAST(5 AS TINYINT))) AS bd,
+        |       zvalue(CAST(1 AS BIGINT), CAST(1 AS BIGINT)) AS z
+        |""".stripMargin).head()
+    assert(row.getDouble(0) == 11.0)
+    assert(row.getDouble(1) == 5.0)
+    assert(row.getInt(2) == 3)   // 5 words → 3 trigram shingles
+    assert(row.getInt(3) == 8)   // 8 LSH bands
+    assert(row.getLong(4) != 0L)
+    assert(row.getLong(5) == -7L)  // 2*4 + (-3)*5
+    assert(row.getLong(6) == 3L)   // bit 0 of a → 0, bit 0 of b → 1
+  }
+
   test("kernel functions reject wrong-typed SQL inputs at analysis time") {
-    // without checkInputDataTypes these would pass analysis and read
-    // garbage through ArrayData accessors at runtime
-    graft.functions.VectorKernels.register(spark)
-    graft.functions.TextKernels.register(spark)
-    Seq(
-      "SELECT bvec_dot(array(1, 2), array(3, 4))",          // int, not tinyint
-      "SELECT fvec_dot(array(1.0, 2.0), array(3.0, 4.0))",  // double, not float
-      "SELECT fvec_norm('nope')",
-      "SELECT shingle_hash64(42)",
-      "SELECT minhash_bands(array('a'))",
-      "SELECT simhash64(array(1))",
-      "SELECT shingle_explode(7)",
-      "SELECT pair_explode(CAST(7 AS BIGINT), array(1, 2), 5)"
-    ).foreach { sql =>
+    assert(wrongTyped.keySet == Kernel.all.map(_.name).toSet,
+      "every kernel in the table needs a wrong-typed call here")
+    Kernel.all.foreach { k =>
+      val sql = s"SELECT ${wrongTyped(k.name)}"
       val e = intercept[org.apache.spark.sql.AnalysisException](
-        spark.sql(sql).collect())
+        extSession.sql(sql).collect())
       assert(e.getMessage.toLowerCase.contains("expects") ||
         e.getMessage.contains("DATATYPE_MISMATCH"), s"$sql -> ${e.getMessage}")
     }
+    // a plan-constant argument must be an integer literal, not a column
+    val e = intercept[Exception](extSession.sql(
+      "SELECT lsh_abuckets(array(CAST(1 AS FLOAT)), CAST(4 AS BIGINT), id, 16) " +
+        "FROM range(1)").collect())
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("must be an integer literal")),
+      messages(e).mkString(" | "))
   }
 
   test("pair_explode dedupes non-adjacent repeated doc ids") {
-    graft.functions.TextKernels.register(spark)
-    def pairs(listSql: String, cap: Int) = spark.sql(
+    def pairs(listSql: String, cap: Int) = extSession.sql(
       s"""SELECT p.* FROM (SELECT CAST(7 AS BIGINT) AS g) t
          |LATERAL VIEW pair_explode(g, $listSql, $cap) p AS doc_a, doc_b, n_a, n_b
          |""".stripMargin).collect()
@@ -97,8 +118,7 @@ class ExtensionsSpec extends SparkSuite {
   }
 
   test("pair_explode with a null group key yields no rows instead of an NPE") {
-    graft.functions.TextKernels.register(spark)
-    def run(cap: Int) = spark.sql(
+    def run(cap: Int) = extSession.sql(
       s"""SELECT p.* FROM (SELECT CAST(NULL AS BIGINT) AS g) t
          |LATERAL VIEW pair_explode(g,
          |  array(struct(CAST(1 AS BIGINT), 1), struct(CAST(2 AS BIGINT), 1),

@@ -15,7 +15,6 @@ class PqEncodeSpec extends SparkSuite {
 
   private def codesOf(dir: String, kernel: Boolean,
                       trained: Boolean): Map[(Long, Int), Long] = {
-    functions.VectorKernels.register(spark)
     import functions.VectorKernels.ddot
     val e = Tables.load(spark, dir, "embeddings")
     val cb =

@@ -153,7 +153,6 @@ class Round15Spec extends SparkSuite {
 
   test("LshAutoBuckets kernel equals the per-plane dot/sign/pack formulation") {
     val e = Tables.load(spark, sfDir, "embeddings")
-    graft.functions.VectorKernels.register(spark)
     val bands = 8
     val maxBits = 16
     val abits = 5 // exercise a non-floor budget

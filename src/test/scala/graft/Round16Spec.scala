@@ -74,14 +74,13 @@ class Round16Spec extends SparkSuite {
 
   // ---- 2. LshAutoBuckets width guard -------------------------------------
 
+  /** `lsh_abuckets` over one constant float vector, through the Column API. */
+  private def abuckets(vec: Seq[Int]) =
+    spark.range(1).select(graft.functions.VectorKernels.abuckets(
+      array(vec.map(v => lit(v.toFloat)): _*), lit(4L), 10, 16).as("b"))
+
   test("lsh_abuckets rejects non-64-dim embeddings instead of prefix-bucketing") {
-    graft.functions.VectorKernels.register(spark)
-    val narrow = (1 to 16).map(i => s"cast($i as float)").mkString(",")
-    val ex = intercept[Exception] {
-      spark.sql(
-        s"SELECT lsh_abuckets(array($narrow), cast(4 as bigint), 10, 16)")
-        .collect()
-    }
+    val ex = intercept[Exception](abuckets(1 to 16).collect())
     // the guard throws IllegalArgumentException; Spark may wrap it in a
     // SparkException chain — look for the message anywhere on the chain
     def messages(t: Throwable): Seq[String] =
@@ -92,11 +91,7 @@ class Round16Spec extends SparkSuite {
   }
 
   test("lsh_abuckets still evaluates 64-dim embeddings") {
-    graft.functions.VectorKernels.register(spark)
-    val full = (1 to 64).map(i => s"cast(${i % 7 - 3} as float)").mkString(",")
-    val row = spark.sql(
-      s"SELECT lsh_abuckets(array($full), cast(4 as bigint), 10, 16) AS b")
-      .collect().head
+    val row = abuckets((1 to 64).map(i => i % 7 - 3)).collect().head
     assert(row.getSeq[Long](0).length == 10)
   }
 
@@ -268,7 +263,6 @@ class Round16Spec extends SparkSuite {
   test("sim_pq_train's trained codebook beats the seed codebook's quantization error") {
     import graft.functions.VectorKernels.ddot
     val raw = Tables.load(spark, sfDir, "embeddings")
-    graft.functions.VectorKernels.register(spark)
     val sl = Similarity.ivfResiduals(raw, raw)
       .select(col("vec_id"), explode(sequence(lit(0), lit(3))).as("sub"), col("res"))
       .select(col("vec_id"), col("sub"),

@@ -26,7 +26,6 @@ class Round20Spec extends SparkSuite {
   }
 
   test("trigram_codes equals the substr trigram stream and preserves string order") {
-    graft.functions.TextKernels.register(spark)
     for (dir <- Seq(sfDir, Sf01)) {
       val docs = Tables.load(spark, dir, "documents")
         .filter(length(col("text")) >= 3)
@@ -60,7 +59,6 @@ class Round20Spec extends SparkSuite {
   }
 
   test("trigram_codes handles supplementary code points like substr does") {
-    graft.functions.TextKernels.register(spark)
     import spark.implicits._
     // 4-byte UTF-8 (one code point each on both paths): 𝕏 = U+1D54F
     val rows = Seq("ab𝕏cd", "𝕏𝕏𝕏", "naïve", "中文混écrit", "ab").toDF("text")

@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSuite {
 
-  graft.functions.VectorKernels.register(spark)
-
   private lazy val emb = Tables.load(spark, sfDir, "embeddings")
 
   /** Exact top-5 per vector (all vectors as queries), for recall ground truth. */

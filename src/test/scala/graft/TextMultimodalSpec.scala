@@ -155,7 +155,6 @@ class TextMultimodalSpec extends SparkSuite {
 
   test("shingle_explode generator matches posexplode of the array kernel") {
     import org.apache.spark.sql.functions._
-    graft.functions.TextKernels.register(spark)
     val d = Tables.load(spark, sfDir, "documents").limit(50)
     val viaGenerator = d.select(col("doc_id"),
         graft.functions.TextKernels.shingleExplode(col("text")))
