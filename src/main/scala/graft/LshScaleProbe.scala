@@ -33,15 +33,14 @@ object LshScaleProbe {
 
   /** The probe-rig Lloyd trainer (2 iterations over a ~20 k hash sample of
     * residuals, per subspace) — the scaled-up twin of the declared
-    * sim_pq_train chain, shared with [[IvfPqStageProbe]] so the stage
-    * decomposition trains the IDENTICAL book the end-to-end probe queries.
-    * Codes stay DENSE in [0, pqK): an emptied cluster keeps its previous
-    * centroid (the packed distance-table index is positional). Decimal
-    * means, not avg(): order-independent, so probe recalls cited in SURVEY
-    * §6 are bit-reproducible across partitionings (r16 ADVICE).
+    * sim_pq_train chain. Codes stay DENSE in [0, pqK): an emptied cluster
+    * keeps its previous centroid (the packed distance-table index is
+    * positional). Decimal means, not avg(): order-independent, so probe
+    * recalls cited in SURVEY §6 are bit-reproducible across partitionings
+    * (r16 ADVICE).
     */
-  private[graft] def trainCodebook(e: org.apache.spark.sql.DataFrame, n: Long,
-                                   pqK: Int, ivfK: Int): org.apache.spark.sql.DataFrame = {
+  private def trainCodebook(e: org.apache.spark.sql.DataFrame, n: Long,
+                            pqK: Int, ivfK: Int): org.apache.spark.sql.DataFrame = {
     import functions.VectorKernels.ddot
     val sampleMod = math.max(1L, n / 20000L)
     val res = operators.Similarity.ivfResiduals(
@@ -112,13 +111,9 @@ object LshScaleProbe {
     val e = Tables.load(spark, dir, "embeddings")
     def timed(label: String)(build: => org.apache.spark.sql.DataFrame): Unit = {
       // warm + best-of-2, the Bench convention
-      val ts = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val n = build.count()
-        Caches.release(spark); spark.catalog.clearCache()
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      println(f"[lshprobe] $label rows=${ts.head._2} best=${ts.map(_._1).min}%.2f s")
+      val rs = (1 to 2).map(_ => QueryRun(spark, dir, Q(label, (_, _) => build, None)))
+      val best = rs.map(r => r.seconds.getOrElse(sys.error(r.error.get))).min
+      println(f"[lshprobe] $label rows=${rs.head.rows} best=$best%.2f s")
     }
     if (args.contains("plan")) {
       println(operators.Similarity.lshTopKAuto(e, 5).queryExecution

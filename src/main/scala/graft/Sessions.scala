@@ -66,7 +66,7 @@ object Sessions {
     "spark.shuffle.sort.bypassMergeThreshold" -> "1",
     // preferSortMergeJoin=false + the AQE SMJ→SHJ local-map threshold
     // (guide §3.1/§9) were tried in r20 and REVERTED: an interleaved
-    // same-session A/B (ConfAB, immune to window drift) read the flipped
+    // same-session A/B (`Probe ab`, immune to window drift) read the flipped
     // configs neutral-to-negative on 10 representative rows (worst
     // ml_naive_bayes +18 %, best text_langid_trigram −17 %, net negative),
     // and the final AQE plans of the probed rows kept their SortMergeJoins

@@ -103,17 +103,31 @@ object Tables {
         spark.catalog.createTable(s"$db.$n", s"$dir/$n.parquet", "parquet")
       }
     }
+    recoverPartitions(spark, db, tables)
   }
 
   /** The reference's periodic re-crawl (T3): drop cached file listings and
     * schema for every registered table so out-of-band appends become
     * visible — `refreshTable` is exactly Glue's incremental crawl analogue.
-    * (`events` resolves to its backing external table, since the registered
-    * `events` itself is the conversion view.)
+    * A partitioned table (an `ingest_date=` layout) also gets the
+    * partitions that landed since the last crawl added to the catalog, as
+    * the reference's crawler does (health-etl/main.tf:196-204): such a table
+    * reads only the partitions its catalog lists. (`events` resolves to its
+    * backing external table, since the registered `events` itself is the
+    * conversion view.)
     */
   def refreshCatalog(spark: SparkSession, db: String = "graft",
-                     tables: Seq[String] = names): Unit =
-    tables.foreach { n =>
-      spark.catalog.refreshTable(s"$db.${if (n == "events") "events_raw" else n}")
-    }
+                     tables: Seq[String] = names): Unit = {
+    tables.foreach(n => spark.catalog.refreshTable(backing(db, n)))
+    recoverPartitions(spark, db, tables)
+  }
+
+  private def backing(db: String, n: String): String =
+    s"$db.${if (n == "events") "events_raw" else n}"
+
+  // recovery throws NOT_A_PARTITIONED_TABLE on any other table
+  private def recoverPartitions(spark: SparkSession, db: String, tables: Seq[String]): Unit =
+    tables.map(backing(db, _))
+      .filter(t => spark.catalog.listColumns(t).collect().exists(_.isPartition))
+      .foreach(spark.catalog.recoverPartitions)
 }

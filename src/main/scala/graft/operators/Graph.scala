@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * duplicate-cluster resolution (CC) and authority scoring for crawl/source
   * prioritization (PageRank over a link-ish graph).
   *
-  * Scale shape — tuned by measurement (BenchOne at sf0.1, local[32]):
+  * Scale shape — tuned by measurement (Bench subset runs at sf0.1, local[32]):
   *  - ONE shuffle builds the degree-annotated adjacency: `groupBy(src) →
   *    collect_set(dst) → explode`, fusing pair-dedup and out-degree into a
   *    single aggregation (the distinct-then-window formulation costs a
@@ -373,7 +373,7 @@ object Graph {
     // columnar SQL cache, not localCheckpoint: an edge-scale frame of raw
     // deserialized rows is heap-sized at the 100× corpus, while the
     // compressed columnar batches are ~10× smaller and spill to disk.
-    // (r20 A/B: eagerly checkpointing SMALL graphs' und too — StageProbe
+    // (r20 A/B: eagerly checkpointing SMALL graphs' und too — `Probe stages`
     // had read the symmetrized distinct built twice — measured NEUTRAL to
     // worse: the row-format materialization costs what the rebuild cost,
     // and it blocks the hop-1 frontier's src=seed constant pushdown into

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.sources.Sources
 
 /** Reference-parity batch ingest (the whole of
   * /root/reference/health-etl/glue_job_script.py, idiomatic Spark):
@@ -43,13 +44,11 @@ object IngestJob {
       case Some(key) => s"${cfg.srcDir}/$key"
       case None      => cfg.srcDir
     }
-    val base = spark.read.option("header", "true")
-      .option("pathGlobFilter", "*.csv")     // prefix scans skip non-CSV too
-    val reader = cfg.schema match {
-      case Some(s) => base.schema(s)
-      case None    => base.option("inferSchema", "true")
-    }
-    Some(reader.csv(path))
+    // both readers take only *.csv files, so prefix scans skip non-CSV too
+    Some(cfg.schema match {
+      case Some(s) => Sources.csv(spark, path, s)
+      case None    => Sources.csvInferred(spark, path)
+    })
   }
 
   /** Full job: returns number of rows ingested BY THIS RUN (0 = guard

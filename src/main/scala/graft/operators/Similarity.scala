@@ -2030,10 +2030,10 @@ object Similarity {
     * [[graft.functions.PqEncodeCodes]] call per vector — the r18 answer
     * to the r17-named 20 M knob (the dataflow form's N·PqM·pqK joined
     * rows + N·PqM-group argmin aggregate were the trained-256 build's
-    * dominant cost). `false` keeps the r17 dataflow shape — the A/B rung
-    * [[graft.PqEncodeProbe]] prices; both paths are value-identical
-    * (same d2 arithmetic order, same round-9 + smallest-code tie), pinned
-    * by PqEncodeSpec and every ivfpq oracle row.
+    * dominant cost). `false` keeps the r17 dataflow shape, the reference
+    * PqEncodeSpec and Round19Spec compare the kernel against; both paths
+    * are value-identical (same d2 arithmetic order, same round-9 +
+    * smallest-code tie), pinned by PqEncodeSpec and every ivfpq oracle row.
     */
   private[graft] def pqCodesFrame(e: DataFrame, raw: DataFrame, cb: DataFrame,
                                   pqK: Int, encodeKernel: Boolean,
@@ -5106,7 +5106,7 @@ object Similarity {
         // scan+argmax chain — the pageRank contrib-checkpoint precedent.
         // coalesce(1) first (r19): the union otherwise accumulates the
         // spread frame's ~32 near-empty partitions PER STEP, and every
-        // later step re-scans them all twice — Profile read 612 tasks /
+        // later step re-scans them all twice — `Probe stages` read 612 tasks /
         // 28 jobs on a query whose state is ≤ 5 rows; one narrow coalesce
         // keeps each checkpointed state a single task at any scale (the
         // picked-set is k-bounded by construction, never corpus-sized)
@@ -5218,7 +5218,7 @@ object Similarity {
         // checkpoint the k-row selection per step (r20): step k references
         // sel TWICE (the max-sim semi-join and the candidate anti-join), so
         // a lazy union let step 5's plan embed 2^4 copies of the whole
-        // step-1 subtree — Profile read 24 jobs / 2.1 s wall for 2.5 s of
+        // step-1 subtree — `Probe stages` read 24 jobs / 2.1 s wall for 2.5 s of
         // task time, all stage-wave and planning latency. The selection is
         // ≤ 5 rows by construction (same bound as kcenter's picked set), so
         // the eager coalesce(1)+checkpoint is O(k) at any corpus scale and

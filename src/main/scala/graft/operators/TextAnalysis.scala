@@ -397,7 +397,7 @@ object TextAnalysis {
       // the two dt consumers' scan filters differ — (isnotnull(text) ∧
       // len≥3 ∧ isnotnull(doc_id)) vs the same without doc_id — so their
       // canonical subtrees never match and AQE rebuilt the whole explode +
-      // partial-agg exchange TWICE (StageProbe: two 8.5 MB-writing stages
+      // partial-agg exchange TWICE (`Probe stages`: two 8.5 MB-writing stages
       // at 5.9 + 7.1 s task time). Pinning the filter on the shared frame
       // makes both branches byte-identical and the exchange is reused.
       // Value-identical: doc_id is never null, and null-doc rows could not
@@ -681,7 +681,7 @@ object TextAnalysis {
       // docsSpread, not docs (r19): the pair explode and the k11 partial
       // aggregate run BEFORE the first exchange, i.e. at the scan's
       // parallelism — on the local single-file scan that serialized ~2.6 s
-      // of per-row work on one task (Profile: 10 stages, 10 tasks); at
+      // of per-row work on one task (`Probe stages`: 10 stages, 10 tasks); at
       // cluster scale the scan arrives wide and the spread is a no-op
       // round-robin of a tiny frame
       val bg = docsSpread(s, dir).filter(size(w) >= 2)
@@ -2361,7 +2361,7 @@ object TextAnalysis {
     (s, dir) => {
       // docsSpread (r19): the token explode and the per-doc multiplicity
       // partial aggregate run pre-exchange at scan parallelism — serialized
-      // on the local single-file scan (Profile: 20 stages, 20 tasks)
+      // on the local single-file scan (`Probe stages`: 20 stages, 20 tasks)
       val d = docsSpread(s, dir)
       val tok = d.select(col("doc_id"), col("lang"),
         explode(words(col("text"))).as("w")).filter(length(col("w")) > 0)

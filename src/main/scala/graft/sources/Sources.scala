@@ -190,10 +190,6 @@ object Sources {
     df.repartition(partitionCols.map(col): _*)
       .write.mode(mode).partitionBy(partitionCols: _*).parquet(out)
 
-  /** Un-partitioned Parquet. */
-  def parquetSink(df: DataFrame, out: String, mode: String = "overwrite"): Unit =
-    df.write.mode(mode).parquet(out)
-
   /** Range-clustered Parquet layout — the data-skipping technique Hive
     * partitioning can't give a high-cardinality column: range-partition on
     * the cluster columns (each output file owns a disjoint key range) and

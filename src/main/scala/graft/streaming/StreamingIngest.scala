@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -19,6 +19,14 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamingIngest {
 
+  private def csvStream(spark: SparkSession, srcDir: String,
+                        schema: StructType): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .option("header", "true")
+      .option("pathGlobFilter", "*.csv")   // the .csv guard, declaratively
+      .csv(srcDir)
+
   /** Start the ingest stream; caller awaits/stops the returned query.
     *
     * @param schema   file-source streams require an explicit schema (no
@@ -29,11 +37,7 @@ object StreamingIngest {
             checkpointDir: String, schema: StructType,
             ingestDate: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    spark.readStream
-      .schema(schema)
-      .option("header", "true")
-      .option("pathGlobFilter", "*.csv")   // the .csv guard, declaratively
-      .csv(srcDir)
+    csvStream(spark, srcDir, schema)
       .withColumn("ingest_date", lit(ingestDate))
       .writeStream
       .format("parquet")
@@ -55,12 +59,8 @@ object StreamingIngest {
   def startForeachBatch(spark: SparkSession, srcDir: String,
                         checkpointDir: String, schema: StructType,
                         trigger: Trigger = Trigger.AvailableNow())(
-      handler: (org.apache.spark.sql.DataFrame, Long) => Unit): StreamingQuery = {
-    spark.readStream
-      .schema(schema)
-      .option("header", "true")
-      .option("pathGlobFilter", "*.csv")
-      .csv(srcDir)
+      handler: (DataFrame, Long) => Unit): StreamingQuery = {
+    csvStream(spark, srcDir, schema)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(handler)

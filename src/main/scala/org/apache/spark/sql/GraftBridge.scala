@@ -29,4 +29,14 @@ object GraftBridge {
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** Block until every listener has seen every event posted so far, so a
+    * listener's view of a finished action is complete when read.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** `Dataset.show`'s table, as a string. */
+  def showString(df: DataFrame, rows: Int): String =
+    df.asInstanceOf[classic.Dataset[Row]].showString(rows, 0)
 }

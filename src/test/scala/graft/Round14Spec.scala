@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class Round14Spec extends SparkSuite {
 
   /** Measured recall@5 of the adaptive geometry on the residue-class panel
-    * (ShowQuery sim_lsh_recall). r14 at 4 bands: 0.406 / 0.451 / 0.493 at
+    * (`Probe show sim_lsh_recall`). r14 at 4 bands: 0.406 / 0.451 / 0.493 at
     * sf0.001/0.01/0.1. r15 raised the OR-construction to 10 bands
     * (Similarity.AutoBands — more independent bands, same per-band bit
     * budget) and measured 0.711 / 0.740 / 0.810 at the same scales

@@ -124,7 +124,7 @@ class Round20Spec extends SparkSuite {
     // one explode+partial-agg exchange: the prediction branch's left join
     // infers isnotnull(doc_id), and unless the shared frame carries the
     // same filter explicitly the canonical subtrees diverge and the whole
-    // corpus-scale explode runs twice (r20 fix; StageProbe had read two
+    // corpus-scale explode runs twice (r20 fix; `Probe stages` had read two
     // identical 8.5 MB exchange writes at sf0.1)
     val df = SparkEntry.queries("text_langid_trigram")(spark, sfDir)
     df.collect(): Unit
