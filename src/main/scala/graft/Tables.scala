@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** Loads the driver testdata tables (TESTDATA.md / FIXTURES.md §B) from a
   * scale-factor directory and registers them as temp views for SQL queries.
   *
   * At 100 TB these parquet directories would be Hive-partitioned table roots;
-  * `spark.read.parquet` + Catalyst gives partition discovery/pruning, predicate
+  * `Sources.parquet` + Catalyst gives partition discovery/pruning, predicate
   * pushdown and column pruning with no engine code — see SURVEY.md §4.2.
   */
 object Tables {
@@ -28,7 +29,7 @@ object Tables {
       // likewise treats the naive µs values as-is) — so oracle comparisons
       // and orderings agree on either layout.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = Sources.parquet(spark, s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -36,7 +37,7 @@ object Tables {
           raw.withColumn("ts", col("ts").cast("timestamp"))
         case _ => raw
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else Sources.parquet(spark, s"$dir/$name.parquet")
 
   /** Rebalance rows across the session's shuffle parallelism before heavy
     * per-row compute (shingling, hashing, vector math). At cluster scale a
@@ -47,7 +48,9 @@ object Tables {
   def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
 
-  /** Register every table as a temp view (idempotent; cheap — schema read only). */
+  /** Register every table as a temp view (idempotent). Each view costs one
+    * listing and one footer read on the driver; no job runs.
+    */
   def registerViews(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
@@ -83,7 +86,7 @@ object Tables {
         }
         spark.sql(s"DROP TABLE IF EXISTS $db.events_raw")
         spark.catalog.createTable(s"$db.events_raw", s"$dir/events.parquet", "parquet")
-        val raw = spark.read.parquet(s"$dir/events.parquet")
+        val raw = Sources.parquet(spark, s"$dir/events.parquet")
         // mirror load()'s two-layout ts normalization in view SQL
         val tsExpr = raw.schema("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** Count-Min sketch cell algebra — the COUNTING member of the mergeable-
   * sketch family, factored like [[Hll]] so batch build, shard merge and
@@ -71,7 +72,7 @@ object Cms {
     * discovery over the per-batch deltas, then one cell-wise SUM.
     */
   def readCells(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Sources.parquet(spark, dir)
       .groupBy("g", "r", "bucket").agg(sum(col("cnt")).as("cnt"))
 
   /** Point estimate for `keys` (a frame with a `k` column) against a cell

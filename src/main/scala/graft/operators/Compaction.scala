@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.Sources
 
 /** Small-file compaction — the table-maintenance operator every
   * file-per-event ingest (like the reference's one-Glue-run-per-upload,
@@ -17,7 +18,7 @@ object Compaction {
               targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val totalBytes = listFileBytes(new java.io.File(inDir))
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(inDir)
+    Sources.parquet(spark, inDir)
       .repartition(nFiles)
       .write.mode("overwrite").parquet(outDir)
     nFiles

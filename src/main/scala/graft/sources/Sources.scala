@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -9,12 +10,15 @@ import org.apache.spark.sql.types.StructType
   * Readers take an explicit schema by default; `csvInferred` reproduces the
   * reference's inference-based read (glue_job_script.py:39-42) for parity,
   * clearly marked as the non-production path (extra pass + type drift).
+  * `parquet` takes its schema from one footer read on the driver, so a
+  * path read submits no job.
   *
   * Writers: partitioned Parquet is the curated-layer sink
-  * (glue_job_script.py:48-53). `partitionedParquet` repartitions by the
-  * partition columns first so each partition directory is written by the
-  * tasks owning its rows — file-per-partition without the reference's
-  * `repartition(1)` single-task bottleneck (glue_job_script.py:49).
+  * (glue_job_script.py:48-53). `partitionedParquet` writes at the frame's
+  * own parallelism, with no exchange: each task writes at most one file per
+  * partition value it holds, so a one-date batch is written by every scan
+  * task instead of the reference's `repartition(1)` single task
+  * (glue_job_script.py:49).
   */
 object Sources {
 
@@ -46,6 +50,7 @@ object Sources {
       .option("header", "true")
       .option("mode", mode)
       .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .option("pathGlobFilter", "*.csv")
       .csv(path)
   }
 
@@ -60,9 +65,10 @@ object Sources {
     * offending fields — the standard bad-records channel a production
     * ingest publishes next to the table instead of silently dropping
     * (DROPMALFORMED) or poisoning the batch (FAILFAST). One declarative
-    * read; both sides are filters over the same scan, so Catalyst prunes
-    * and pushes independently and nothing is collected or double-parsed
-    * per row.
+    * read; both sides are filters over the same scan definition, so
+    * Catalyst prunes and pushes independently and nothing is collected.
+    * Each side that is written runs its own scan, so writing both parses
+    * the input twice.
     *
     * @param requiredCols columns that must be non-null for the curated
     *                     side; defaults to every schema field
@@ -104,10 +110,16 @@ object Sources {
     spark.read.schema(schema).json(path)
 
   /** Parquet (S3): schema travels with the files; partition columns are
-    * discovered from the Hive layout and prunable.
+    * discovered from the Hive layout and prunable. The frame is the one
+    * `spark.read.parquet(path)` builds, over one listing of the path, but
+    * its data schema comes from one footer read on the driver, so building
+    * it submits no job (Spark's own inference runs a one-task job per
+    * read). With schema merging on, with parquet served by the V2 source,
+    * with no data file, or when the footer cannot be read, this is
+    * `spark.read.parquet(path)` itself.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    GraftParquet.read(spark, path).getOrElse(spark.read.parquet(path))
 
   /** Parquet with schema evolution: a long-lived table accretes columns over
     * its lifetime; `mergeSchema` reconciles every file footer into the union
@@ -181,14 +193,14 @@ object Sources {
 
   // ------------------------------------------------------------- writers
 
-  /** Hive-partitioned Parquet append (S2), scalable: one exchange on the
-    * partition columns instead of `repartition(1)`.
+  /** Hive-partitioned Parquet append (S2), scalable: no exchange and no
+    * `repartition(1)`. Rows are written at the frame's parallelism; each
+    * task writes at most one file per partition value it holds.
     */
   def partitionedParquet(df: DataFrame, out: String,
                          partitionCols: Seq[String],
                          mode: String = "append"): Unit =
-    df.repartition(partitionCols.map(col): _*)
-      .write.mode(mode).partitionBy(partitionCols: _*).parquet(out)
+    df.write.mode(mode).partitionBy(partitionCols: _*).parquet(out)
 
   /** Range-clustered Parquet layout — the data-skipping technique Hive
     * partitioning can't give a high-cardinality column: range-partition on

@@ -69,10 +69,4 @@ object TableSchemas {
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
-
-  val byName: Map[String, StructType] = Map(
-    "region" -> region, "nation" -> nation, "customer" -> customer,
-    "supplier" -> supplier, "part" -> part, "orders" -> orders,
-    "lineitem" -> lineitem, "events" -> events, "documents" -> documents,
-    "embeddings" -> embeddings)
 }

@@ -71,7 +71,9 @@ class SourcesSpec extends SparkSuite {
   test("partitioned parquet sink: Hive layout, no single-task write, prunable") {
     val dir = tmp("graft-part")
     val src = orders.withColumn("order_year", year(col("o_orderdate")))
-    Sources.partitionedParquet(src, dir, Seq("order_year"))
+    // one write job, with no exchange stage before it
+    val (_, jobs) = jobsDuring(Sources.partitionedParquet(src, dir, Seq("order_year")))
+    assert(jobs == 1, s"the partitioned write submitted $jobs jobs")
     val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("order_year=")), dirs.mkString(","))
     val back = Sources.parquet(spark, dir)
@@ -83,6 +85,16 @@ class SourcesSpec extends SparkSuite {
       src.filter(col("order_year") === 2000).count())
     assert(!scanned.contains("PushedFilters: [IsNotNull(order_year)"),
       "partition filter should prune, not post-filter")
+    // one partition value over 4 input partitions: every input task writes
+    // its own file, since no exchange funnels the value's rows to one writer
+    val one = tmp("graft-part-one")
+    val constant = orders.repartition(4).withColumn("order_year", lit(2000))
+    Sources.partitionedParquet(constant, one, Seq("order_year"))
+    val files = new java.io.File(one, "order_year=2000").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(files.length >= 2, s"${files.length} part file(s) for one partition value")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(Sources.parquet(spark, one)) == rows(constant))
   }
 
   test("malformed CSV rows: PERMISSIVE captures, DROPMALFORMED drops, row counts differ") {
@@ -127,6 +139,20 @@ class SourcesSpec extends SparkSuite {
     assert(byKind("missing required").head._1.exists(_.startsWith("4")))
     // nothing lost: curated + quarantined = all input rows
     assert(valid.count() + rejects.count() == 4)
+  }
+
+  test("quarantine reads only *.csv: a stray .txt beside the CSV is not ingested") {
+    val dir = tmp("graft-quarantine-stray")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "data.csv"),
+      "o_orderkey,o_custkey\n1,10\n2,20\n")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "notes.txt"),
+      "landing notes\nbatch of 2 rows, see data.csv\n")
+    val schema = org.apache.spark.sql.types.StructType(
+      TableSchemas.orders.fields.take(2))
+    val (valid, rejects) = Sources.csvQuarantine(spark, dir, schema)
+    assert(valid.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    val rej = rejects.collect().map(_.getAs[String]("raw_record"))
+    assert(rej.isEmpty, rej.mkString("|"))
   }
 
   test("quarantine reasons respect the required-column subset") {

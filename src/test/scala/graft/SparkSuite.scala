@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test JVM. */
@@ -24,4 +27,19 @@ object TestSpark {
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.Sf0001
+
+  /** Jobs submitted while `body` runs. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    GraftBridge.drainListenerBus(spark)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      GraftBridge.drainListenerBus(spark)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
